@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -50,14 +49,25 @@ case class TokenFingerprint(child: Expression) extends UnaryExpression {
 }
 
 object GraftFunctions {
-  private val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "token_fingerprint" -> ((children: Seq[Expression]) => TokenFingerprint(children.head)),
-    "window_hashes" -> ((children: Seq[Expression]) => WindowHashes(children(0), children(1)))
-  )
+  /** The one function table: every custom SQL function, as the
+    * (identifier, info, builder) triple both registration paths take.
+    */
+  val fns: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    entry("token_fingerprint", classOf[TokenFingerprint])(c => TokenFingerprint(c.head)),
+    entry("window_hashes", classOf[WindowHashes])(c => WindowHashes(c(0), c(1))))
 
-  /** Register into an existing session (tests, Verify, Bench). */
-  def register(spark: SparkSession): Unit = fns.foreach { case (name, builder) =>
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
+  private def entry(name: String, cls: Class[_])(builder: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
+
+  /** Register into an existing session (tests, Verify, Bench, every
+    * SparkEntry query). Names the session already has are left alone, so
+    * a session registers each function once however many queries it runs.
+    */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    fns.foreach { case (id, info, builder) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
+    }
   }
 }
 
@@ -65,14 +75,5 @@ object GraftFunctions {
   * spark-submit deployments.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("token_fingerprint"),
-      new ExpressionInfo(classOf[TokenFingerprint].getName, "token_fingerprint"),
-      (children: Seq[Expression]) => TokenFingerprint(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("window_hashes"),
-      new ExpressionInfo(classOf[WindowHashes].getName, "window_hashes"),
-      (children: Seq[Expression]) => WindowHashes(children(0), children(1))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit = GraftFunctions.fns.foreach(ext.injectFunction)
 }

@@ -44,7 +44,7 @@ object ParseVendors {
     */
   def wapples(line: Column, serial: Column): Column = {
     // one-pass grok: all 4 groups in ONE regex execution per row
-    // (RegexpExtractStruct, the ParseFast form — the reference compiles the
+    // (RegexpExtractStruct, as Parse.oplog/nginx — the reference compiles the
     // regex once and reads all named groups from one Captures)
     val m = graft.functions.RegexpExtractStruct.of(line, WapplesRe, 4)
     // "yyyy-MM-dd HH:mm:ss Z" == the reference's %Y-%m-%d %H:%M:%S %z —
@@ -199,7 +199,8 @@ object ParseVendors {
   def secuLog(v: SecuVendor)(line: Column, serial: Column): Column = {
     // ONE regex execution per row for the whole 6-field tuple
     // (RegexpExtractStruct — the built-in regexp_extract would re-run the
-    // vendor regex once per captured field, 6× the matching cost)
+    // vendor regex once per captured field, 6 matches per row; the same
+    // switch measured 2.0× on the 4-group oplog regex stage)
     val nGroups = Seq(v.gDt, v.gSip, v.gSport, v.gDip, v.gDport, v.gProto).max
     val m = graft.functions.RegexpExtractStruct.of(line, v.re, nGroups)
     val proto = if (v.gProto == 0) lit("tcp") else m(s"g${v.gProto}")

@@ -259,11 +259,12 @@ object DedupOps {
     * OpsSpec (planted corpus, exceptAll both ways) and bit-identical at
     * sf0.1/10× against the doc-level dumps + the 10× union-find.
     *
-    * WHEN TO USE WHICH (measured, adjacent A/B in one JVM —
-    * graft.AbClusters): on a pairs-SPARSE corpus (near-dups rotated apart,
-    * like the testdata and its 10× upscale) the doc-level form is ~10-30%
-    * faster (5.0-5.8 s vs 5.5-7.8 s at sf0.1; 11.9-14.1 vs 12.5-16.4 s at
-    * 10×) — the collapse's signature-window shuffle and extra checkpoints
+    * WHEN TO USE WHICH (measured, adjacent A/B in one JVM; the two
+    * regimes are the d09 and d19_clusters_verbatim queries, which
+    * graft.Profile runs side by side): on a pairs-SPARSE corpus (near-dups
+    * rotated apart, like the testdata and its 10× upscale) the doc-level
+    * form is ~10-30% faster (5.0-5.8 s vs 5.5-7.8 s at sf0.1; 11.9-14.1 vs
+    * 12.5-16.4 s at 10×) — the collapse's signature-window shuffle and extra checkpoints
     * buy nothing when groups are singletons. The moment VERBATIM families
     * appear (boilerplate pages — every real web crawl), doc pairs grow
     * quadratically per family and the collapse wins outright: with 200
@@ -489,18 +490,6 @@ object DedupOps {
       .localCheckpoint(true)
     var labels = edges.select(col("src").as("sid")).distinct()
       .withColumn("lbl", col("sid")).localCheckpoint(true)
-    // the per-round frames are label tables (≤ one row per endpoint) — far
-    // smaller than the corpus the session's coalescing floor is tuned for;
-    // with a lowered floor every one of the ~log(diameter)·4 loop jobs
-    // spawns multi-task stages whose scheduling overhead dwarfs the work.
-    // Scope the Spark-default 1 MB floor over the loop only (restored in
-    // the finally) — at cluster scale label frames clear 1 MB anyway, so
-    // this changes nothing there.
-    val spark = edges.sparkSession
-    val floorKey = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    val floorBefore = spark.conf.getOption(floorKey)
-    spark.conf.set(floorKey, "1m")
-    try {
     var converged = false
     var i = 0
     // one relax+jump step over a (sid, lbl, old) frame; `old` (the label at
@@ -541,12 +530,6 @@ object DedupOps {
     require(converged,
       s"duplicateClusters did not converge within $maxIters rounds")
     labels.select(col("sid"), col("lbl").as("cluster"))
-    } finally {
-      floorBefore match {
-        case Some(v) => spark.conf.set(floorKey, v)
-        case None => spark.conf.unset(floorKey)
-      }
-    }
   }
 
   /** Soft deduplication: instead of DROPPING near-duplicates, every

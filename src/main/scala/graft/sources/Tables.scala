@@ -22,9 +22,9 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  /** Pinned testdata schemas (TESTDATA.md contract, printed by
-    * graft.PrintSchemas): an explicit schema skips the per-read parquet
-    * schema-inference resolution, which profiled as the single largest
+  /** Pinned testdata schemas (TESTDATA.md contract, copied from each
+    * file's inferred `schema.toDDL`): an explicit schema skips the per-read
+    * parquet schema-inference resolution, which profiled as the single largest
     * analyzer cost across the 212-query bench (ResolveDataSource ≈ 42% of
     * total rule time — a footer read + resolution per `spark.read.parquet`
     * call, paid by every query). Tables outside this map (none today) fall

@@ -47,4 +47,19 @@ class ExtensionsSpec extends SparkSpec {
       prevDefault.foreach(SparkSession.setDefaultSession)
     }
   }
+
+  test("SparkEntry queries register each function once: later queries keep the first builder") {
+    val registry = spark.sessionState.functionRegistry
+    def registered = graft.functions.GraftFunctions.fns.map { case (id, _, _) =>
+      (registry.lookupFunction(id).get, registry.lookupFunctionBuilder(id).get)
+    }
+    SparkEntry.queries("t04_fingerprint_roll")(spark, Sf)
+    val first = registered
+    SparkEntry.queries("t04_fingerprint_roll")(spark, Sf)
+    SparkEntry.queries("p01_tokenize")(spark, Sf)
+    registered.zip(first).foreach { case ((info, builder), (info0, builder0)) =>
+      assert(info eq info0)
+      assert(builder eq builder0)
+    }
+  }
 }

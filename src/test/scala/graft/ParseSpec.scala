@@ -7,6 +7,7 @@ import graft.operators.Parse
   * exact field and nanosecond-timestamp asserts (the reference embeds
   * expected values the same way, e.g.
   * /root/reference/src/parser/operation_log.rs:80-290).
+  * Each case runs the parser `Parse.parsed` itself uses.
   */
 class ParseSpec extends SparkSpec {
 
