@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** Deterministic routing + fan-out, mirroring the reference's
   * classify_kind → per-kind forwarder dispatch
   * (/root/reference/src/bin/reproduce/main.rs:525-543, 1049-1097).
@@ -18,6 +20,9 @@ import org.apache.spark.sql.functions._
 object Route {
 
   val Quarantine = "quarantine"
+
+  /** Every sink a routed row may land in. */
+  val Sinks: Seq[String] = Tables.Kinds :+ Quarantine
 
   /** sink = format family of the source, or quarantine on parse failure. */
   def sinkCol(kind: Column, parseOk: Column): Column =

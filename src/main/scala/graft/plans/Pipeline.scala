@@ -14,12 +14,13 @@ import graft.table.SinkTable
   * reference's run_pipeline_with_sender loop
   * (/root/reference/src/controller.rs:61-145).
   *
-  * Single logical plan until the write: Catalyst fuses parse + dedup-window
-  * + join into few stages; the only shuffles are (a) the window partition by
-  * (source, ts) and (b) the fan-out repartition by (sink, bucket). The
-  * enrich join is broadcast — no shuffle. At 10^12 rows both shuffles hash
-  * on high-cardinality composite keys, so no hot partitions; AQE skew-join
-  * covers residual skew.
+  * Single logical plan until the write, and no job after it (the report
+  * comes from the write's own metrics, see [[run]]): Catalyst fuses parse +
+  * dedup-window + join into few stages; the only shuffles are (a) the
+  * window partition by (source, ts) and (b) the fan-out repartition by
+  * (sink, bucket). The enrich join is broadcast — no shuffle. At 10^12
+  * rows both shuffles hash on high-cardinality composite keys, so no hot
+  * partitions; AQE skew-join covers residual skew.
   */
 object Pipeline {
 
@@ -33,30 +34,30 @@ object Pipeline {
     Route.routed(enriched)
   }
 
-  /** Full run with sink writes + manifests. Returns the report. */
+  /** Full run with sink writes + manifests. Returns the report over every
+    * commit of the table, this one included.
+    *
+    * Nothing runs after the write: the commit takes its row count, resume
+    * lineage and per-sink report partials from the write itself, and the
+    * report is merged from the manifests on the driver (a local relation;
+    * collecting it submits no job). One listing of the manifests gives both
+    * the resume bound and the report.
+    */
   def run(spark: SparkSession, dir: String, outBase: String, commitId: Long = 1L): DataFrame = {
     val routed = transformed(spark, dir)
-
-    // parse ok/failed counts without an extra pass: observe() attaches
-    // metric aggregates to the plan (Spark-native; no .collect loops)
-    val observed = routed.observe("graft_parse",
-      sum(when(col("parse_ok"), 1L).otherwise(0L)).as("ok"),
-      sum(when(!col("parse_ok"), 1L).otherwise(0L)).as("failed"))
-
     val table = new SinkTable(outBase)
+    val committed = table.manifests
     // quarantined rows keep the WHOLE line as bytes — the reference's raw-log
     // fallback record (Log{kind, log bytes} — src/collector/log.rs:129-149);
     // parsed sinks carry null here (columnar: costs nothing when absent)
-    val slim = observed.select(
+    val slim = routed.where(col("line_no") > SinkTable.resumePoint(committed)).select(
       col("doc_id"), col("tokens"), col("n_tok"), col("source"), col("line_no"),
       col("ts_ns"), col("level"), col("src_ip"), col("status_code"),
       col("vendor"), col("log_type"), col("version"), col("bytes"),
       when(col("sink") === Route.Quarantine, encode(col("raw_line"), "UTF-8")).as("raw_log"),
       col("parse_ok"), col("sink"))
-    table.appendResumable(
-      slim.repartition(col("sink"), pmod(xxhash64(col("doc_id")), lit(8))), commitId)
-
-    val committed = table.read(spark)
-    Report.perSink(committed)
+    val m = table.commit(slim.repartition(col("sink"), pmod(xxhash64(col("doc_id")), lit(8))),
+      commitId, Report.partials, Report.check)
+    Report.merged(spark, committed.filter(_.commitId != commitId) :+ m)
   }
 }

@@ -110,8 +110,11 @@ object Tables {
   /** Format family for a source: 0=oplog 1=nginx 2=fgt 3=zeek. */
   def kindNum(source: Column): Column = sourceNum(source) % lit(4)
 
+  /** The format families, in kindNum order. */
+  val Kinds: Seq[String] = Seq("oplog", "nginx", "fgt", "zeek")
+
   def kindName(source: Column): Column =
-    element_at(array(lit("oplog"), lit("nginx"), lit("fgt"), lit("zeek")), kindNum(source) + lit(1))
+    element_at(array(Kinds.map(lit): _*), kindNum(source) + lit(1))
 
   /** One deterministic log line per document, format keyed by source.
     * Input columns required: doc_id (long), source, n_chars.

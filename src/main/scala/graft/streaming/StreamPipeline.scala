@@ -58,7 +58,7 @@ object StreamPipeline {
           checkpointDir: String): StreamingQuery = {
     val writeBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>
       val table = new SinkTable(outBase)
-      if (!table.manifests.exists(_.commitId == batchId)) {
+      if (!table.isCommitted(batchId)) {
         table.commit(
           batch.repartition(col("sink"), pmod(xxhash64(col("doc_id")), lit(8))),
           batchId)

@@ -71,6 +71,16 @@ class StreamingSpec extends SparkSpec {
     assert(t.read(spark).count() === before) // idempotent — no dupes
   }
 
+  test("each micro-batch manifest's rows equals the rows in its commit directory") {
+    val in = tmp("graft-stream-in5"); val out = tmp("graft-stream-out5")
+    val cp = tmp("graft-stream-cp5")
+    val n = stage(in, "line_no < 200") + stage(in, "line_no >= 200 AND line_no < 260")
+    StreamPipeline.run(spark, in, out, cp).awaitTermination()
+    val ms = new SinkTable(out).manifests
+    assert(ms.nonEmpty && ms.map(_.rows).sum === n)
+    ms.foreach(m => assert(spark.read.parquet(m.partitions.head).count() === m.rows, m))
+  }
+
   test("watermarked windowed aggregate matches batch groupBy on drained input") {
     val in = tmp("graft-stream-in4")
     stage(in, "line_no >= 0")
